@@ -63,29 +63,16 @@ object ChangeFeed {
     * protocol as table manifests: a racing consumer that lost gets a
     * ConcurrentWriteException and should treat the range as consumed.
     */
-  private def commitOffset(spark: SparkSession, vt: VersionedTable,
+  private[sources] def commitOffset(spark: SparkSession, vt: VersionedTable,
                            dir: Path, seq: Long, from: Long, to: Long): Unit = {
-    val fs = fsOf(spark, vt)
-    fs.mkdirs(dir)
     val json = mapper.createObjectNode()
     json.put("seq", seq)
     json.put("from", from)
     json.put("to", to)
     json.put("timestampMs", System.currentTimeMillis())
-    val bytes = mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(json)
-    val tmp = new Path(dir, s".tmp-$seq-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      new Path(vt.root).toUri, spark.sparkContext.hadoopConfiguration)
-    try fc.rename(tmp, new Path(dir, f"$seq%020d.json"))
-    catch {
-      case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        fs.delete(tmp, false)
-        throw new VersionedTable.ConcurrentWriteException(
-          s"offset $seq of group $dir was committed by a concurrent consumer", e)
-      case e: Throwable => fs.delete(tmp, false); throw e
-    }
+    LogStore.putIfAbsent(fsOf(spark, vt), new Path(dir, f"$seq%020d.json"),
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(json),
+      s"offset $seq of group $dir was committed by a concurrent consumer")
   }
 
   /** Last table version the group processed, if the group exists. */

@@ -369,17 +369,8 @@ private[sources] object GraftTableProps {
   private[sources] def atomicWrite(spark: SparkSession, root: String,
                                    name: String, bytes: Array[Byte]): Unit = {
     val dir = new Path(root)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dir)
-    val tmp = new Path(dir,
-      s".tmp-$name-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      dir.toUri, spark.sparkContext.hadoopConfiguration)
-    try fc.rename(tmp, new Path(dir, name),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    catch { case e: Throwable => fs.delete(tmp, false); throw e }
+    val conf = spark.sparkContext.hadoopConfiguration
+    LogStore.replace(dir.getFileSystem(conf), conf, new Path(dir, name), bytes)
   }
 
   def statsCols(spark: SparkSession, root: String): Seq[String] =

@@ -209,12 +209,14 @@ final case class GraftPartitionedUpdateCommand(pvt: PartitionedVersionedTable,
 }
 
 /** `MERGE INTO` on a partitioned graft table. With a
-  * `t.<partitionCol> = s.<col>` ON conjunct (`srcPartName` defined) the
-  * source slices by that expression and only the touched logs open — the
-  * partition-pruned fast path ([[PartitionedVersionedTable.mergeInto]]).
+  * `t.<partitionCol> = s.<col>` ON conjunct (`srcPartName` defined) each
+  * source row's member is that column and only the touched logs open —
+  * the partition-pruned fast path ([[PartitionedVersionedTable.mergeInto]]).
   * Without it, the textbook global `ON t.id = s.id` routes through
-  * [[PartitionedVersionedTable.mergeIntoGlobal]], which derives the
-  * per-partition slices from a single source⋈table probe pass.
+  * [[PartitionedVersionedTable.mergeIntoGlobal]], which derives each
+  * source row's member from a single source⋈table probe pass. Either way
+  * the clauses then run as one pass over all touched members, not one
+  * flat merge per member.
   */
 final case class GraftPartitionedMergeCommand(pvt: PartitionedVersionedTable,
                                               tableSchema: org.apache.spark.sql.types.StructType,

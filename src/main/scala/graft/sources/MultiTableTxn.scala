@@ -465,22 +465,9 @@ final class MultiTableTxn(spark: SparkSession, logRoot: String) {
     vec.toSeq.sortBy(_._1).foreach { case (n, (root, v)) =>
       val t = tn.putObject(n); t.put("root", root); t.put("version", v); ()
     }
-    fs.mkdirs(txnLogPath)
-    val bytes = mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(json)
-    val tmp = new Path(txnLogPath,
-      s".tmp-$id-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      new Path(logRoot).toUri, spark.sparkContext.hadoopConfiguration)
-    try fc.rename(tmp, new Path(txnLogPath, f"$id%020d.json"))
-    catch {
-      case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        fs.delete(tmp, false)
-        throw new VersionedTable.ConcurrentWriteException(
-          s"transaction $id was stamped by a concurrent writer", e)
-      case e: Throwable => fs.delete(tmp, false); throw e
-    }
+    LogStore.putIfAbsent(fs, new Path(txnLogPath, f"$id%020d.json"),
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(json),
+      s"transaction $id was stamped by a concurrent writer")
     id
   }
 
@@ -609,7 +596,7 @@ final class MultiTableTxn(spark: SparkSession, logRoot: String) {
     drop.foreach(id =>
       fs.delete(new Path(txnLogPath, f"$id%020d.json"), false))
     // stamp debris from crashed writers: a process that died between
-    // fs.create(tmp) and the rename leaves .tmp-<id>-<uuid> files the
+    // fs.create(tmp) and the rename leaves .tmp-<entry>-<uuid> files the
     // id-suffix listing never sees — sweep them past the in-flight window
     val cutoff = System.currentTimeMillis() - orphanRetentionMs
     if (fs.exists(txnLogPath))

@@ -14,10 +14,16 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * shards). Same layout convention as Hive-style partitioning, so external
   * tools can still list it.
   *
-  * Each partition commits independently (its own optimistic-concurrency
+  * Each partition commits its own versions (its own optimistic-concurrency
   * log); `read()` sees each partition's latest committed snapshot — the
   * same trade Delta users accept when they MERGE with a partition
-  * predicate. For readers that need a CONSISTENT multi-partition view, a
+  * predicate. MERGE INTO and copy-on-write DELETE nonetheless cost ONE Spark
+  * pass however many members they touch: one discovery job over all
+  * touched members, one rewrite join, one write staged under
+  * `<root>/_staging/dml-<uuid>/` and clustered by member, then a per-member
+  * conditional commit of each staged dir ([[onePass]]). The other verbs
+  * run one member pipeline each on a bounded pool ([[mapMembers]]).
+  * For readers that need a CONSISTENT multi-partition view, a
   * top-level snapshot log (`<root>/_snaplog/`) records the
   * partition→version vector AFTER all of an operation's partition commits
   * land, with the same fails-if-exists atomic rename: a coordinator
@@ -37,6 +43,8 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
                                       constraints: Seq[(String, String)] = Nil,
                                       memberStatsCols: Seq[String] = Nil,
                                       memberBloomCols: Seq[String] = Nil) {
+
+  import PartitionedVersionedTable._
 
   /** Exposed for the DSv2 layer ([[GraftPartitionedTable]]). */
   def tableRoot: String = root
@@ -93,12 +101,9 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
     */
   private def collectValuesBounded(distinctVals: DataFrame,
                                    what: String): Seq[String] = {
-    val cap = spark.conf
-      .getOption(PartitionedVersionedTable.MaxRouteValuesConf)
-      .map(_.trim.toInt)
-      .getOrElse(PartitionedVersionedTable.DefaultMaxRouteValues)
-    require(cap >= 1,
-      s"${PartitionedVersionedTable.MaxRouteValuesConf} must be >= 1")
+    val cap = PartitionedVersionedTable.positiveIntConf(spark,
+      PartitionedVersionedTable.MaxRouteValuesConf,
+      PartitionedVersionedTable.DefaultMaxRouteValues)
     val rows = distinctVals.limit(cap + 1).collect()
     require(rows.length <= cap,
       s"$what: more than $cap distinct $partitionCol values would fold " +
@@ -123,35 +128,50 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
     * member's commit. The bound (default 4, [[MemberConcurrencyConf]])
     * keeps driver-side planning/commit work from piling up when a table
     * has hundreds of partitions; 1 restores the strictly sequential loop.
-    * Failure semantics match the sequential loop's: some members may have
-    * committed member versions, but no cross-partition snapshot is
+    * On the first failure no further member starts, and the call waits
+    * for the members already in flight before rethrowing that failure:
+    * no member task outlives the verb, so no member version lands after
+    * the caller has seen the error (and released the frame it sliced).
+    * Some members may have committed, but no cross-partition snapshot is
     * stamped unless every task returned.
     */
-  private def mapMembers[T](vals: Seq[String])(f: String => T): Seq[(String, T)] = {
-    val bound = spark.conf
-      .getOption(PartitionedVersionedTable.MemberConcurrencyConf)
-      .map(_.trim.toInt)
-      .getOrElse(PartitionedVersionedTable.DefaultMemberConcurrency)
-    require(bound >= 1,
-      s"${PartitionedVersionedTable.MemberConcurrencyConf} must be >= 1")
-    if (vals.size <= 1 || bound == 1) vals.map(v => v -> f(v))
+  private[sources] def mapMembers[T](vals: Seq[String])(f: String => T): Seq[(String, T)] =
+    eachMember(vals)(v => v -> f(v))
+
+  /** [[mapMembers]] over any per-member items — the one-pass DML runs its
+    * driver-side member work (manifest reads, frame set-up, commits)
+    * through the same bounded pool.
+    */
+  private def eachMember[A, T](items: Seq[A])(f: A => T): Seq[T] = {
+    val bound = PartitionedVersionedTable.positiveIntConf(spark,
+      PartitionedVersionedTable.MemberConcurrencyConf,
+      PartitionedVersionedTable.DefaultMemberConcurrency)
+    if (items.size <= 1 || bound == 1) items.map(f)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(vals.size, bound))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
+        math.min(items.size, bound))
+      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
       try {
-        val futs = vals.map { v =>
-          scala.concurrent.Future {
-            // job-group/conf thread-locals don't cross threads; pin the
-            // session so child-thread reads resolve against it
-            SparkSession.setActiveSession(spark)
-            v -> f(v)
-          }
+        val tasks = items.map { a =>
+          pool.submit(new java.util.concurrent.Callable[Option[T]] {
+            def call(): Option[T] =
+              if (failure.get != null) None // a member failed: start no more
+              else {
+                // job-group/conf thread-locals don't cross threads; pin
+                // the session so child-thread reads resolve against it
+                SparkSession.setActiveSession(spark)
+                try Some(f(a))
+                catch { case t: Throwable => failure.compareAndSet(null, t); throw t }
+              }
+          })
         }
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futs),
-          scala.concurrent.duration.Duration.Inf)
+        // drain EVERY task (skipped ones return at once) before deciding
+        val results = tasks.map { t =>
+          try t.get()
+          catch { case _: java.util.concurrent.ExecutionException => None }
+        }
+        Option(failure.get).foreach(t => throw t)
+        results.flatten
       } finally pool.shutdown()
     }
   }
@@ -260,11 +280,11 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
     * expression the ON condition equates with the partition column (the
     * rule that makes per-partition matching EQUAL global matching: a
     * target row in partition p can only ever match source rows whose
-    * `srcPartValue` is p). The source is sliced by it; each touched
-    * partition runs [[VersionedTable.mergeIntoRetrying]] with the same
-    * clauses, untouched logs are not even opened — unless a
-    * NOT MATCHED BY SOURCE arm exists, which must visit every partition
-    * (all their rows are unmatched; the clause conditions decide).
+    * `srcPartValue` is p). Each source row's value names its member; one
+    * [[onePass]] applies the clauses to every touched member at once, and
+    * untouched logs are not even opened — unless a NOT MATCHED BY SOURCE
+    * arm exists, which must visit every partition (all their rows are
+    * unmatched; the clause conditions decide).
     *
     * INSERT arms must assign the partition column, and a distributed
     * guard raises if an inserted row's value disagrees with its ON-routed
@@ -286,19 +306,21 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
             "(rows cannot move between partition logs)")
       case _ => ()
     }
-    def guardedInserts(v: String): Seq[VersionedTable.MergeIntoAction] =
-      notMatched.map {
-        case VersionedTable.MergeIntoInsert(c, vals) =>
-          val pv = vals.getOrElse(partitionCol,
-            throw new IllegalArgumentException(
-              s"MERGE INSERT on a partitioned table must assign $partitionCol"))
-          VersionedTable.MergeIntoInsert(c, vals + (partitionCol ->
-            when(pv.cast("string") === lit(v), pv).otherwise(raise_error(
-              concat(lit(s"MERGE INSERT row's $partitionCol ("),
-                pv.cast("string"),
-                lit(s") must equal its ON-routed partition '$v'"))))))
-        case other => other
-      }
+    // the ON-routed partition of a source row IS its member: an INSERT
+    // arm must land the row there or raise, never in another log
+    val guardedInserts = notMatched.map {
+      case VersionedTable.MergeIntoInsert(c, vals) =>
+        val pv = vals.getOrElse(partitionCol,
+          throw new IllegalArgumentException(
+            s"MERGE INSERT on a partitioned table must assign $partitionCol"))
+        VersionedTable.MergeIntoInsert(c, vals + (partitionCol ->
+          when(pv.cast("string") === col(SrcMember), pv).otherwise(raise_error(
+            concat(lit(s"MERGE INSERT row's $partitionCol ("),
+              pv.cast("string"),
+              lit(") must equal its ON-routed partition '"), col(SrcMember),
+              lit("'"))))))
+      case other => other
+    }
     val (mat, release) = GraftColumnBridge.localCheckpointReleasable(source)
     try {
       val existing = partitions
@@ -311,26 +333,16 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
       val touched =
         if (notMatched.nonEmpty) srcValues
         else srcValues.filter(existing.contains)
-      val committed = mapMembers(touched) { v =>
-        if (!existing.contains(v)) {
-          val sch = schemaForNewPartitions.orElse(tableSchema).getOrElse(
-            throw new IllegalStateException(
-              s"cannot create partition $partitionCol=$v: no schema known " +
-                s"(empty table at $root and none supplied)"))
-          partitionUnchecked(v).overwrite(spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), sch))
-        }
-        partition(v).mergeIntoStableRetrying(
-          mat.filter(srcPartValue.cast("string") === v),
-          condition, matched, guardedInserts(v), notMatchedBySource)
-      }
+      createMembers(touched.filterNot(existing.contains), schemaForNewPartitions)
+      // NOT MATCHED BY SOURCE arms also visit every other member: all of
+      // its rows are unmatched there, and the clause conditions decide
       val rest =
         if (notMatchedBySource.isEmpty) Nil
-        else mapMembers(existing.filterNot(touched.contains)) { v =>
-          partition(v).mergeIntoStableRetrying(mat.limit(0), condition,
-            matched, Nil, notMatchedBySource)
-        }
-      commitSnapshot("merge_into", committed ++ rest)
+        else existing.filterNot(touched.contains)
+      val committed = onePass("merge_into", touched ++ rest)(mergePass(
+        mat.withColumn(SrcMember, srcPartValue.cast("string")), condition,
+        matched, guardedInserts, notMatchedBySource))
+      commitSnapshot("merge_into", committed)
     } finally release()
   }
 
@@ -339,15 +351,16 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
     * the conjunct would have declared is DERIVED in one distributed
     * pass: the source joins the table's (ON-columns, partition) rows —
     * Catalyst column-prunes the probe scan to exactly those columns —
-    * so each source row learns which partition logs hold its matches.
-    * Matched slices run the clause-faithful member merge per touched
-    * log; source rows matching NOWHERE route by their first-true INSERT
-    * arm's partition assignment (NOT MATCHED arms reference only the
-    * source, so the routing value IS the value the arm would insert);
-    * NOT MATCHED BY SOURCE arms visit the remaining logs with an empty
-    * slice, exactly the fast path's sync sweep. Per-partition matching
-    * over match-routed slices EQUALS global matching: a target row's
-    * matches are, by construction, all in its own slice.
+    * so each source row learns which partition logs hold its matches;
+    * source rows matching NOWHERE route by their first-true INSERT arm's
+    * partition assignment (NOT MATCHED arms reference only the source,
+    * so the routing value IS the value the arm would insert). One
+    * [[onePass]] then applies every arm to every routed member — a
+    * member receiving both updates and inserts commits one version — and
+    * NOT MATCHED BY SOURCE arms visit the remaining logs, exactly the
+    * fast path's sync sweep. Per-partition matching over match-routed
+    * slices EQUALS global matching: a target row's matches are, by
+    * construction, all in its own slice.
     *
     * Semantics note: duplicate source rows that match a target raise the
     * cardinality violation exactly as flat MERGE does — including
@@ -360,10 +373,9 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
     *
     * Guarded corner: an UPDATE arm (MATCHED or NOT MATCHED BY SOURCE)
     * that rewrites a column the ON condition references, combined with
-    * an INSERT arm, rejects loudly — the probe routes against the
-    * ORIGINAL snapshot, but the insert pass's member merge would
-    * re-evaluate ON against the POST-update rows and could swallow an
-    * insert a single-pass MERGE would land.
+    * an INSERT arm, rejects loudly. The one pass would evaluate ON
+    * against the original rows for both arms; the guard stays so such a
+    * statement keeps its outcome until lifting it is a change of its own.
     */
   def mergeIntoGlobal(source: DataFrame, condition: Column,
                       matched: Seq[VersionedTable.MergeIntoAction] = Nil,
@@ -384,10 +396,8 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
         case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
           a.name
       }.toSet
-      // the guard covers NOT MATCHED BY SOURCE updates too: they run in
-      // the same first pass as MATCHED arms, so an NMBS UPDATE rewriting
-      // an ON-referenced column equally poisons the insert pass's
-      // re-evaluation of ON against post-update rows
+      // covers NOT MATCHED BY SOURCE updates too (see the guarded corner
+      // in this method's doc)
       (matched ++ notMatchedBySource).foreach {
         case u: VersionedTable.MergeIntoUpdate =>
           val hit = u.set.keySet.intersect(onRefs)
@@ -395,10 +405,8 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
             s"global MERGE (no partition conjunct) cannot combine an INSERT " +
               s"arm with an UPDATE (MATCHED or NOT MATCHED BY SOURCE) of " +
               s"ON-referenced column(s) " +
-              s"${hit.toSeq.sorted.mkString(", ")} — the sequential " +
-              "update/insert passes would re-evaluate ON against " +
-              "post-update rows; add the partition conjunct or avoid " +
-              "rewriting join keys")
+              s"${hit.toSeq.sorted.mkString(", ")}; add the partition " +
+              "conjunct or avoid rewriting join keys")
         case _ => ()
       }
     }
@@ -451,21 +459,6 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
       val touchedVals = collectValuesBounded(
         matchedSlices.select(col("__mg_part")).distinct(),
         "global MERGE match routing")
-      // an INSERT-only merge (insert-if-absent, the common idempotent
-      // load) has NOTHING to apply to matched slices: matched rows no-op
-      // and their member logs must not even commit a version — handing
-      // the member merge zero clauses would reject outright
-      val committed =
-        if (matched.isEmpty && notMatchedBySource.isEmpty) Nil
-        else mapMembers(touchedVals) { v =>
-          // NOT the stable path: matchedSlices puts a dropDuplicates
-          // shuffle above the materialized probe, so the member-side
-          // checkpoint still pays (three jobs per member re-run that
-          // shuffle otherwise)
-          partition(v).mergeIntoRetrying(
-            matchedSlices.filter(col("__mg_part") === v).drop("__mg_part"),
-            condition, matched, Nil, notMatchedBySource)
-        }
       // unmatched-anywhere rows insert into their arm-assigned partition
       val insertArms = notMatched.collect {
         case VersionedTable.MergeIntoInsert(c, vals) =>
@@ -473,9 +466,8 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
             throw new IllegalArgumentException(
               s"MERGE INSERT on a partitioned table must assign $partitionCol")))
       }
-      val inserted: Seq[(String, Long)] =
-        if (insertArms.isEmpty) Nil
-        else {
+      val inserts: Option[(DataFrame, Seq[String])] =
+        Option.when(insertArms.nonEmpty) {
           // a null remaining AFTER the fold means no arm fired (the row
           // legitimately inserts nowhere); an arm that FIRES with a null
           // partition value raises — the fast path's validate(null)
@@ -492,40 +484,31 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
             routed.filter(col("__mg_part").isNull).drop("__mg_part")
               .withColumn("__mg_part", route)
               .filter(col("__mg_part").isNotNull))
-          val insVals = collectValuesBounded(
-            ins.select(col("__mg_part")).distinct(),
-            "global MERGE insert routing")
-          mapMembers(insVals) { v =>
-            if (!existing.contains(v) && !touchedVals.contains(v)) {
-              val sch = schemaForNewPartitions.orElse(tableSchema).getOrElse(
-                throw new IllegalStateException(
-                  s"cannot create partition $partitionCol=$v: no schema " +
-                    s"known (empty table at $root and none supplied)"))
-              partitionUnchecked(v).overwrite(spark.createDataFrame(
-                new java.util.ArrayList[org.apache.spark.sql.Row](), sch))
-            }
-            // a member seen ONLY here still owes its NOT MATCHED BY
-            // SOURCE sweep (all its rows are source-unmatched); a member
-            // already visited by the matched pass ran that sweep there
-            partition(v).mergeIntoStableRetrying(
-              ins.filter(col("__mg_part") === v).drop("__mg_part"),
-              condition, Nil, notMatched,
-              if (touchedVals.contains(v)) Nil else notMatchedBySource)
-          }
+          (ins, collectValuesBounded(ins.select(col("__mg_part")).distinct(),
+            "global MERGE insert routing"))
         }
-      val rest =
-        if (notMatchedBySource.isEmpty) Nil
-        else existing
-          .filterNot(touchedVals.contains)
-          .filterNot(v => inserted.exists(_._1 == v)).map { v =>
-            v -> partition(v).mergeIntoStableRetrying(mat0.limit(0), condition,
-              matched, Nil, notMatchedBySource)
-          }
-      // fold duplicate member commits (a value can appear in both the
-      // matched and inserted passes — two member versions, latest wins)
-      val latest = (committed ++ inserted).groupBy(_._1).view
-        .mapValues(_.map(_._2).max).toSeq
-      commitSnapshot("merge_into", latest ++ rest)
+      val insVals = inserts.map(_._2).getOrElse(Nil)
+      createMembers(insVals.filterNot(existing.contains), schemaForNewPartitions)
+      // every routed source row carries its member; one pass then applies
+      // all arms per member, so a member receiving both matched rows and
+      // inserts commits ONE version. An INSERT-only merge (insert-if-
+      // absent, the common idempotent load) has nothing to apply to
+      // matched rows: their members must not even commit a version.
+      val members = (
+        (if (matched.isEmpty && notMatchedBySource.isEmpty) Nil else touchedVals) ++
+          insVals ++
+          (if (notMatchedBySource.isEmpty) Nil else existing)).distinct.sorted
+      val passSrc = (matchedSlices +: inserts.map(_._1).toSeq)
+        .map(_.withColumnRenamed("__mg_part", SrcMember))
+        .reduce(_ unionByName _)
+      // the matched slices sit above a dropDuplicates shuffle: store them
+      // once instead of re-running it for discovery, rewrite and inserts
+      val (src, releaseSrc) = GraftColumnBridge.localCheckpointReleasable(passSrc)
+      try {
+        val committed = onePass("merge_into", members)(mergePass(src,
+          condition, matched, notMatched, notMatchedBySource))
+        commitSnapshot("merge_into", committed)
+      } finally releaseSrc()
     } finally release()
   }
 
@@ -541,9 +524,10 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
     * sweep to the named partition values (the partition-predicate
     * discipline: a delete known to touch only `repo=x` should not even
     * open other logs — and without the hint every partition commits at
-    * least a no-op version). Each partition applies its own dir-grained
-    * copy-on-write — or a deletion vector with `useDeletionVectors`
-    * (merge-on-read, no rewrite). Returns the cross-partition snapshot id.
+    * least a no-op version). Copy-on-write runs as one [[onePass]] with
+    * each member's flat [[VersionedTable.delete]] semantics; with
+    * `useDeletionVectors` (merge-on-read, no rewrite) each member writes
+    * its own deletion vector. Returns the cross-partition snapshot id.
     */
   def delete(predicate: org.apache.spark.sql.Column,
              useDeletionVectors: Boolean = false,
@@ -551,8 +535,11 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
     val targets =
       if (partitionsHint.nonEmpty) partitionsHint.map(validate).sorted
       else partitions
-    val committed = mapMembers(targets)(v =>
-      partitionUnchecked(v).delete(predicate, useDeletionVectors))
+    val committed =
+      if (useDeletionVectors)
+        mapMembers(targets)(v =>
+          partitionUnchecked(v).delete(predicate, useDeletionVectors = true))
+      else onePass("delete", targets)(deletePass(predicate))
     commitSnapshot(if (useDeletionVectors) "delete_dv" else "delete", committed)
   }
 
@@ -748,6 +735,244 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
     }
   }
 
+  // ------------------------------------------------------ one-pass DML
+
+  /** Create the member logs `vals` with an empty version 0 in the table
+    * schema, so a MERGE can insert into a partition that has no log yet.
+    */
+  private def createMembers(vals: Seq[String],
+                            schemaForNewPartitions: Option[StructType]): Unit =
+    if (vals.nonEmpty) {
+      val sch = schemaForNewPartitions.orElse(tableSchema).getOrElse(
+        throw new IllegalStateException(
+          s"cannot create partition $partitionCol=${vals.head}: no schema " +
+            s"known (empty table at $root and none supplied)"))
+      mapMembers(vals)(v => partitionUnchecked(v).overwrite(spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), sch)))
+    }
+
+  /** Runs after a one-pass DML's write and before its member commits,
+    * with the pass's member values — lets specs inject a concurrent
+    * commit or a crash at that point.
+    */
+  @volatile private[graft] var beforeMemberCommits: Seq[String] => Unit = _ => ()
+
+  /** Copy-on-write DML over the member logs `vals` in ONE pass instead of
+    * one pipeline per member. `build` gets the members (each with the
+    * manifest the pass read) and returns each one's [[MemberPlan]] plus
+    * the post-image of every rewriting member: its physical columns and
+    * [[PassMemberCol]] naming the member. That frame is written ONCE,
+    * clustered by member, under `<root>/_staging/dml-<uuid>/`, observing
+    * every member's row/stats ledger during the write. Each member's
+    * staged dir then moves into its log and commits conditional on the
+    * version the pass read ([[VersionedTable.commitStagedDir]]); a member
+    * that loses to a concurrent writer re-runs the same pass alone, up to
+    * four more times. Members whose physical layouts differ (schema or
+    * column mapping) run as separate passes, one per layout, and at most
+    * [[PassMembers]] members share a pass, which bounds the observed
+    * aggregates. Returns (member, committed version) for every member.
+    */
+  private def onePass(op: String, vals: Seq[String])(
+      build: Seq[PassMember] => (Seq[MemberPlan], Option[DataFrame])): Seq[(String, Long)] = {
+    val (done, lost) = vals.grouped(PassMembers).toSeq
+      .map(passOnce(op, _, build)).unzip
+    done.flatten ++ lost.flatten.map { v =>
+      partitionUnchecked(v).withConflictRetry(4) {
+        passOnce(op, Seq(v), build) match {
+          case (Seq(c), Nil) => c
+          case _ => throw new VersionedTable.ConcurrentWriteException(
+            s"$op on $partitionCol=$v lost to a concurrent writer again", null)
+        }
+      }
+    }
+  }
+
+  /** One pass over `vals` (split by physical layout); returns the
+    * committed members and the ones that lost their commit.
+    */
+  private def passOnce(op: String, vals: Seq[String],
+                       build: Seq[PassMember] => (Seq[MemberPlan], Option[DataFrame]))
+      : (Seq[(String, Long)], Seq[String]) = {
+    val members = eachMember(vals) { v =>
+      val vt = partitionUnchecked(v)
+      PassMember(v, vt, vt.latestManifest)
+    }
+    val (done, lost) = members
+      .groupBy(pm => (pm.base.schemaJson, pm.base.colMap)).values.toSeq
+      .map(ms => runPass(op, ms, build)).unzip
+    (done.flatten, lost.flatten)
+  }
+
+  private def runPass(op: String, members: Seq[PassMember],
+                      build: Seq[PassMember] => (Seq[MemberPlan], Option[DataFrame]))
+      : (Seq[(String, Long)], Seq[String]) = {
+    val (plans, post) = build(members)
+    val staging = new Path(root, s"_staging/$StagingPrefix${java.util.UUID.randomUUID()}")
+    try {
+      val written = post.map { df =>
+        val vt0 = members.head.vt
+        val present = vt0.trackedStatsIn(df.columns.toSeq)
+        val aggs = members.zipWithIndex.flatMap { case (pm, i) =>
+          vt0.memberLedgerAggs(df, present, col(PassMemberCol) === pm.v, s"__m$i")
+        }
+        val obs = new org.apache.spark.sql.Observation(
+          s"pvt_stats_${java.util.UUID.randomUUID().toString.take(8)}")
+        df.observe(obs, aggs.head, aggs.tail: _*)
+          .write.partitionBy(PassMemberCol).mode("overwrite")
+          .option("compression", "zstd").parquet(staging.toString)
+        (StructType(df.schema.filterNot(_.name == PassMemberCol)), obs.get)
+      }
+      beforeMemberCommits(members.map(_.v))
+      val outcomes = eachMember(members.zip(plans).zipWithIndex) { case ((pm, plan), i) =>
+        try Right(pm.v -> (plan match {
+          case Noop => pm.vt.commitNoop(pm.base, op)
+          case r: Rewrite =>
+            val (schema, ledger) = written.get
+            val observed = (name: String) => ledger.get(s"__m$i$name")
+            val rows = observed("__rows").fold(0L)(_.asInstanceOf[Long])
+            if (r.unchangedAt.contains(rows)) pm.vt.commitNoop(pm.base, op)
+            else if (rows == 0L)
+              // the partitioned write makes no dir for an empty member;
+              // an empty post-image still commits an (empty) dir
+              pm.vt.commitRewrite(pm.base, op, r.keep, spark.createDataFrame(
+                new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
+            else pm.vt.commitStagedDir(pm.base, op, r.keep,
+              new Path(staging, s"$PassMemberCol=${pm.v}"), schema, observed)
+        }))
+        catch {
+          case _: VersionedTable.ConcurrentWriteException => Left(pm.v)
+        }
+      }
+      (outcomes.collect { case Right(c) => c }, outcomes.collect { case Left(v) => v })
+    } finally {
+      fs.delete(staging, true)
+      try {
+        val parent = staging.getParent
+        if (fs.exists(parent) && fs.listStatus(parent).isEmpty)
+          fs.delete(parent, false)
+      } catch { case scala.util.control.NonFatal(_) => () }
+    }
+  }
+
+  /** The `dirs` of several members as ONE relation (a pass's members
+    * share a physical layout): one scan packs all their files into tasks
+    * together instead of a union of one scan per member. Each row carries
+    * its member in [[TgtMember]], looked up by its file's dir token.
+    */
+  private def readMembers(parts: Seq[(PassMember, Seq[String])]): DataFrame = {
+    val owner = typedLit(parts.flatMap { case (pm, dirs) =>
+      dirs.map(d => VersionedTable.dirTokenRe.r.findFirstMatchIn(d)
+        .fold(d)(_.group(1)) -> pm.v)
+    }.toMap)
+    val first = parts.head._1
+    first.vt.readPathsWithPos(first.base,
+      parts.flatMap { case (pm, dirs) => pm.vt.dirPathsOf(dirs) },
+      parts.flatMap { case (pm, _) => pm.vt.dvPathsOf(pm.base) })
+      .withColumn(TgtMember, owner(regexp_extract(
+        col(VersionedTable.dvFileCol), VersionedTable.dirTokenRe, 1)))
+  }
+
+  /** The dirs of `pm` holding rows discovery found (dir tokens carry a
+    * random suffix, so one token set serves every member).
+    */
+  private def hitDirs(pm: PassMember, tokens: Set[String]): Seq[String] =
+    pm.base.dataDirs.filter(d => VersionedTable.matchesToken(d, tokens))
+
+  /** [[onePass]] plan of a copy-on-write DELETE — per member the flat
+    * [[VersionedTable.delete]]: a single-dir member rewrites its survivors
+    * directly (and commits metadata-only when the count shows nothing
+    * matched); the rest share one discovery job, and only hit dirs
+    * rewrite.
+    */
+  private def deletePass(predicate: Column)(ms: Seq[PassMember])
+      : (Seq[MemberPlan], Option[DataFrame]) = {
+    val pred = ms.head.vt.physicalPredicate(ms.head.base, predicate)
+    val probed = ms.filter(pm =>
+      pm.vt.fusedDeleteRows(pm.base).isEmpty && pm.base.dataDirs.nonEmpty)
+    val tokens =
+      if (probed.isEmpty) Set.empty[String]
+      else VersionedTable.hitDirTokens(
+        readMembers(probed.map(pm => pm -> pm.base.dataDirs)).filter(pred))
+    val plans = ms.map { pm =>
+      pm.vt.fusedDeleteRows(pm.base) match {
+        case Some(total) => Rewrite(pm.base.dataDirs, Nil, Some(total))
+        case None =>
+          val hit = hitDirs(pm, tokens)
+          if (hit.isEmpty) Noop
+          else Rewrite(hit, pm.base.dataDirs.filterNot(hit.contains))
+      }
+    }
+    val post = eachMember(ms.zip(plans).collect { case (pm, r: Rewrite) => (pm, r) }) {
+      case (pm, r) => pm.vt.readDirsOf(pm.base, r.hit).filter(!pred)
+        .withColumn(PassMemberCol, lit(pm.v))
+    }.reduceOption(_ unionByName _)
+    (plans, post)
+  }
+
+  /** [[onePass]] plan of MERGE INTO — per member the flat
+    * [[VersionedTable.mergeInto]] with the same shared clause logic, all
+    * members at once: `src` is the (stable) source with each row's member
+    * in [[SrcMember]], and every join adds member equality to ON, so a
+    * target row only ever meets its own member's source rows.
+    */
+  private def mergePass(src: DataFrame, condition: Column,
+                        matched: Seq[VersionedTable.MergeIntoAction],
+                        notMatched: Seq[VersionedTable.MergeIntoAction],
+                        notMatchedBySource: Seq[VersionedTable.MergeIntoAction])(
+      ms: Seq[PassMember]): (Seq[MemberPlan], Option[DataFrame]) = {
+    VersionedTable.checkMergeClauses(matched, notMatched, notMatchedBySource)
+    def target(parts: Seq[(PassMember, Seq[String])]): DataFrame =
+      ms.head.vt.toLogicalWithPos(ms.head.base, readMembers(parts), Seq(TgtMember))
+    // every member's whole snapshot: what discovery probes, and what an
+    // INSERT-only merge anti-joins against
+    lazy val whole = target(ms.map(pm => pm -> pm.base.dataDirs))
+    val fields = ms.head.vt.schemaOf(ms.head.base.version)
+      .getOrElse(whole.drop(VersionedTable.dvFileCol, VersionedTable.dvRowCol,
+        TgtMember).schema).fields.toSeq
+    VersionedTable.requireNoShadow(src, fields)
+    val s = src.filter(col(SrcMember).isin(ms.map(_.v): _*))
+      .withColumn(VersionedTable.mergeSrcFlag, lit(true))
+    val on = condition && col(TgtMember) === col(SrcMember)
+    val tokens =
+      if (notMatchedBySource.nonEmpty || matched.isEmpty) Set.empty[String]
+      else VersionedTable.hitDirTokens(whole.join(s, on, "inner"))
+    val plans = ms.map { pm =>
+      val hit =
+        if (notMatchedBySource.nonEmpty) pm.base.dataDirs
+        else if (matched.nonEmpty) hitDirs(pm, tokens)
+        else Nil
+      if (hit.isEmpty && notMatched.isEmpty) Noop
+      else Rewrite(hit, pm.base.dataDirs.filterNot(hit.contains))
+    }
+    val rewriting = ms.zip(plans).collect { case (pm, r: Rewrite) => (pm, r) }
+    if (rewriting.isEmpty) (plans, None)
+    else {
+      // members with hit dirs rewrite through ONE join (their unmatched
+      // source rows arrive as its source-only rows); the rest only insert
+      val (hitParts, insertOnly) = rewriting.partition(_._2.hit.nonEmpty)
+      def srcOf(members: Seq[(PassMember, Rewrite)]) =
+        s.filter(col(SrcMember).isin(members.map(_._1.v): _*))
+      val rewritten = Option.when(hitParts.nonEmpty)(VersionedTable.mergeJoined(
+        target(hitParts.map { case (pm, r) => pm -> r.hit })
+          .join(srcOf(hitParts), on, if (notMatched.isEmpty) "left_outer" else "full_outer"),
+        src.columns.toSeq, fields, matched, notMatched, notMatchedBySource,
+        Seq(coalesce(col(TgtMember), col(SrcMember)).as(PassMemberCol))))
+      val inserted = Option.when(insertOnly.nonEmpty) {
+        val srcMember = Seq(col(SrcMember).as(PassMemberCol))
+        // discovery ran and found no match there: every source row inserts
+        if (matched.nonEmpty || notMatchedBySource.nonEmpty)
+          VersionedTable.mergeInserts(srcOf(insertOnly), fields, notMatched, srcMember)
+        else VersionedTable.mergeInserts(srcOf(insertOnly).join(whole, on, "left_anti"),
+          fields, notMatched, srcMember)
+      }
+      val post = (rewritten ++ inserted).reduce(_ unionByName _)
+      VersionedTable.checkConstraints(post.drop(PassMemberCol), constraints,
+        "merge_into")
+      (plans, Some(ms.head.vt.physicalPostImage(ms.head.base, post,
+        Seq(PassMemberCol))))
+    }
+  }
+
   // ----------------------------------------- cross-partition snapshots
 
   private def snapLogPath = new Path(root, "_snaplog")
@@ -856,6 +1081,15 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
       partition(v).vacuumKeeping(keepVecs.flatMap(_.get(v)).toSet,
         orphanRetentionMs)
     }
+    // a one-pass DML that died between its staged write and its cleanup
+    // leaves its staging dir; sweep those past the in-flight window
+    val staging = new Path(root, "_staging")
+    val cutoff = System.currentTimeMillis() - orphanRetentionMs
+    if (fs.exists(staging))
+      fs.listStatus(staging)
+        .filter(st => st.getPath.getName.startsWith(StagingPrefix) &&
+          st.getModificationTime < cutoff)
+        .foreach(st => fs.delete(st.getPath, true))
   }
 
   /** Cross-partition DESCRIBE DETAIL facts:
@@ -1047,9 +1281,8 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
     * ones at the just-committed version. Fails-if-exists rename, same
     * protocol as [[VersionedTable]] manifests.
     */
-  private[sources] def commitSnapshot(op: String,
-                                      touched: Seq[(String, Long)]): Long = {
-    val id = latestSnapshot.map(_ + 1).getOrElse(0L)
+  private[sources] def commitSnapshot(op: String, touched: Seq[(String, Long)],
+                                      id: Long = latestSnapshot.map(_ + 1).getOrElse(0L)): Long = {
     val touchedMap = touched.toMap
     val vec = partitions.flatMap { v =>
       touchedMap.get(v).orElse(partition(v).latestVersion).map(v -> _)
@@ -1061,22 +1294,9 @@ final class PartitionedVersionedTable(spark: SparkSession, root: String,
     json.put("timestampMs", System.currentTimeMillis())
     val pn = json.putObject("parts")
     vec.foreach { case (v, ver) => pn.put(v, ver) }
-    fs.mkdirs(snapLogPath)
-    val bytes = mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(json)
-    val tmp = new Path(snapLogPath,
-      s".tmp-$id-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      new Path(root).toUri, spark.sparkContext.hadoopConfiguration)
-    try fc.rename(tmp, new Path(snapLogPath, f"$id%020d.json"))
-    catch {
-      case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        fs.delete(tmp, false)
-        throw new VersionedTable.ConcurrentWriteException(
-          s"snapshot $id was committed by a concurrent writer", e)
-      case e: Throwable => fs.delete(tmp, false); throw e
-    }
+    LogStore.putIfAbsent(fs, new Path(snapLogPath, f"$id%020d.json"),
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(json),
+      s"snapshot $id was committed by a concurrent writer")
     id
   }
 }
@@ -1102,15 +1322,66 @@ object PartitionedVersionedTable {
   val MaxRouteValuesConf = "spark.graft.partitions.maxRouteValues"
   private[sources] val DefaultMaxRouteValues = 100000
 
-  /** Session conf: how many member (per-partition) commit tasks one
-    * partitioned write/merge/delete keeps in flight (guide-§2.6 job
-    * overlap — the next member's tasks back-fill executors freed by the
-    * previous member's stragglers). Each task is a full member pipeline
-    * (discovery, rewrite, commit), so a handful in flight saturates the
-    * cluster; 1 disables the overlap.
+  /** Session conf: how many member (per-partition) tasks one partitioned
+    * verb keeps in flight. For append, overwrite, keyed merge, update and
+    * deletion-vector delete each task is a full member pipeline
+    * (discovery, rewrite, commit), and the overlap lets the next member's
+    * jobs back-fill executors freed by the previous member's stragglers.
+    * MERGE INTO and copy-on-write DELETE run one Spark pass instead and
+    * use the pool only for driver-side member work (manifest reads and
+    * commits). 1 disables the overlap.
     */
   val MemberConcurrencyConf = "spark.graft.partitions.memberConcurrency"
   private[sources] val DefaultMemberConcurrency = 4
+
+  /** A positive integer session conf; a malformed or non-positive value
+    * fails naming the key and the value it got.
+    */
+  private[sources] def positiveIntConf(spark: SparkSession, key: String,
+                                       default: Int): Int =
+    spark.conf.getOption(key).fold(default) { raw =>
+      raw.trim.toIntOption.filter(_ >= 1).getOrElse(
+        throw new IllegalArgumentException(
+          s"$key must be a positive integer, got '$raw'"))
+    }
+
+  /** The member of each post-image row in a one-pass DML write; the
+    * staged dir of member `v` is `<staging>/__vt_member=<v>`.
+    */
+  private val PassMemberCol = "__vt_member"
+  /** The member column of the target rows and of the source rows in a
+    * one-pass MERGE (distinct names, both sides meet in one join).
+    */
+  private val TgtMember = "__vt_tmember"
+  private val SrcMember = "__vt_smember"
+
+  /** Name prefix of a one-pass DML's dir under `<root>/_staging/` (the
+    * streaming sinks stage there too, by query id).
+    */
+  private val StagingPrefix = "dml-"
+
+  /** Most members one pass observes (each adds `1 + 3 x stats columns`
+    * aggregates to the write); larger DMLs run several passes.
+    */
+  private val PassMembers = 32
+
+  /** One member of a one-pass DML: its handle and the manifest the pass
+    * read (it commits `base.version + 1`, or loses to a concurrent writer).
+    */
+  private final case class PassMember(v: String, vt: VersionedTable,
+                                      base: VersionedTable.Manifest)
+
+  /** What a pass does with one member: commit its state again ([[Noop]]),
+    * or rewrite the `hit` dirs and commit the post-image beside `keep`
+    * ([[Rewrite]]). `unchangedAt` is the post-image row count that means
+    * nothing matched (a fused single-dir DELETE); the member then commits
+    * metadata-only and its staged dir is dropped.
+    */
+  private sealed trait MemberPlan
+  private case object Noop extends MemberPlan
+  private final case class Rewrite(hit: Seq[String], keep: Seq[String],
+                                   unchangedAt: Option[Long] = None)
+    extends MemberPlan
 
   private[sources] def writeMarker(spark: SparkSession, root: String,
                                    partitionCol: String, schema: StructType,

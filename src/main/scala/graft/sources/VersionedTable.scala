@@ -81,14 +81,6 @@ final class VersionedTable(spark: SparkSession, val root: String,
   private def validateConstraints(df: DataFrame, op: String): Unit =
     checkConstraints(df, constraints, op)
 
-  /** Discovery tokens are the RELATIVE "data/c…[/chunk=N]" form; manifest
-    * entries are usually the same, but a shallow clone's entries are
-    * absolute paths into the source table — suffix-match so both resolve
-    * (the uuid in the dir name makes suffix collisions negligible).
-    */
-  private def matchesToken(entry: String, tokens: Set[String]): Boolean =
-    tokens.exists(t => entry == t || entry.endsWith("/" + t))
-
   /** A manifest entry owned by ANOTHER table's root (shallow-clone ref):
     * readable, but never deleted by this table's vacuum. Clone refs are
     * written fully-qualified ([[shallowCloneTo]] uses `fs.makeQualified`),
@@ -183,20 +175,14 @@ final class VersionedTable(spark: SparkSession, val root: String,
     val arr = json.putArray("entries")
     versions.foreach(v => arr.add(manifestNode(mapper, manifest(v))))
     val bytes = mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(json)
-    val tmp = new Path(logPath,
-      s"._cptmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, /* overwrite = */ true)
-    try out.write(bytes) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      rootPath.toUri, spark.sparkContext.hadoopConfiguration)
-    try fc.rename(tmp, checkpointPath,
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    catch { case NonFatal(_) => fs.delete(tmp, false) } // advisory: best-effort
+    try LogStore.replace(fs, spark.sparkContext.hadoopConfiguration,
+      checkpointPath, bytes)
+    catch { case NonFatal(_) => () } // advisory: best-effort
   }
 
   /** Commit a manifest for version `v`: the JSON is fully written to a
-    * temp file first, then moved into place with `FileContext.rename`
-    * without the OVERWRITE option — readers can never observe a partial
+    * temp file first, then moved into place with
+    * [[LogStore.putIfAbsent]] — readers can never observe a partial
     * manifest. On HDFS-class stores that rename is an atomic
     * create-if-absent, so of two racing writers exactly one wins; on
     * `RawLocalFileSystem` (tests, `file:` URIs) the exists-check and the
@@ -302,22 +288,10 @@ final class VersionedTable(spark: SparkSession, val root: String,
             case _ => m
           }
         }
-      val bytes = mapper.writerWithDefaultPrettyPrinter()
-        .writeValueAsBytes(manifestNode(mapper, mono))
-      val tmp = new Path(logPath,
-        s".tmp-${m.version}-${java.util.UUID.randomUUID().toString.take(8)}")
-      val out = fs.create(tmp, /* overwrite = */ true)
-      try out.write(bytes) finally out.close()
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        rootPath.toUri, spark.sparkContext.hadoopConfiguration)
-      try fc.rename(tmp, manifestPath(m.version))
-      catch {
-        case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          fs.delete(tmp, false)
-          throw new ConcurrentWriteException(
-            s"version ${m.version} was committed by a concurrent writer", e)
-        case e: Throwable => fs.delete(tmp, false); throw e
-      }
+      LogStore.putIfAbsent(fs, manifestPath(m.version),
+        mapper.writerWithDefaultPrettyPrinter()
+          .writeValueAsBytes(manifestNode(mapper, mono)),
+        s"version ${m.version} was committed by a concurrent writer")
       manifestCache.put(mono.version, mono)
       if ((mono.version + 1) % checkpointInterval == 0) writeCheckpoint()
       mono.version
@@ -703,44 +677,66 @@ final class VersionedTable(spark: SparkSession, val root: String,
     * comparison semantics.
     */
   private def ledgerAggs(df: DataFrame, present: Seq[String]): Seq[Column] =
-    count(lit(1)).as("__rows") +: present.flatMap { c =>
-      val e = statValExpr(df, c)
-      Seq(min(e).as(s"__mn_$c"), max(e).as(s"__mx_$c"),
-        count(e).as(s"__nn_$c")) // count(e) = non-null rows
+    memberLedgerAggs(df, present, lit(true), "")
+
+  /** The tracked stats columns present in a frame of `cols`. */
+  private[sources] def trackedStatsIn(cols: Seq[String]): Seq[String] =
+    physTracked(statsCols).filter(cols.contains)
+
+  /** [[ledgerAggs]] over the rows where `member` holds, each aggregate
+    * name prefixed with `prefix` — one write can then observe the ledger
+    * of every member dir it produces.
+    */
+  private[sources] def memberLedgerAggs(df: DataFrame, present: Seq[String],
+                                        member: Column, prefix: String): Seq[Column] =
+    count(when(member, lit(1))).as(s"${prefix}__rows") +: present.flatMap { c =>
+      val e = when(member, statValExpr(df, c))
+      Seq(min(e).as(s"${prefix}__mn_$c"), max(e).as(s"${prefix}__mx_$c"),
+        count(e).as(s"${prefix}__nn_$c")) // count(e) = non-null rows
     }
 
   private def writeData(df: DataFrame, version: Long): DirWrite = {
-    val dir = f"data/c$version%010d-${java.util.UUID.randomUUID().toString.take(8)}"
-    val present = physTracked(statsCols).filter(df.columns.contains)
-    val bloomPresent = physTracked(bloomCols).filter(df.columns.contains)
+    val dir = newDataDir(version)
+    val present = trackedStatsIn(df.columns.toSeq)
     val obs = new org.apache.spark.sql.Observation(
       s"vt_stats_${java.util.UUID.randomUUID().toString.take(8)}")
     val aggs = ledgerAggs(df, present)
     val toWrite = df.observe(obs, aggs.head, aggs.tail: _*)
     toWrite.write.mode("overwrite").option("compression", "zstd")
       .parquet(new Path(rootPath, dir).toString)
-    val row = obs.get
-    val rows = row.get("__rows").map(_.asInstanceOf[Long]).getOrElse(0L)
-    val stats = Some(row).filter(_ => present.nonEmpty).map { row =>
+    writtenDir(dir, df.schema, present, obs.get.get)
+  }
+
+  private def newDataDir(version: Long): String =
+    f"data/c$version%010d-${java.util.UUID.randomUUID().toString.take(8)}"
+
+  /** The manifest entries of a freshly-written dir from its observed
+    * ledger (`observed(name)` per [[ledgerAggs]] name), plus the bloom and
+    * file-stats sidecars the table tracks.
+    */
+  private def writtenDir(dir: String, schema: StructType, present: Seq[String],
+                         observed: String => Option[Any]): DirWrite = {
+    val rows = observed("__rows").map(_.asInstanceOf[Long]).getOrElse(0L)
+    val stats = Some(present).filter(_.nonEmpty).map { present =>
       val cols = present.flatMap { c =>
-        (row.get(s"__mn_$c"), row.get(s"__mx_$c")) match {
+        (observed(s"__mn_$c"), observed(s"__mx_$c")) match {
           case (Some(mn), Some(mx)) if mn != null && mx != null =>
             Some(c -> ColStats(mn.toString, mx.toString,
-              statKind(df.schema(c).dataType)))
+              statKind(schema(c).dataType)))
           case _ => None
         }
       }.toMap
       // a dir with zero rows can be skipped for ANY predicate; without the
       // marker its missing column stats would make it a forever-candidate
-      if (row.get("__rows").contains(0L))
-        cols + (rowsMarker -> ColStats("0", "0", "rows"))
+      if (rows == 0L) cols + (rowsMarker -> ColStats("0", "0", "rows"))
       else cols
     }.filter(_.nonEmpty).map(s => Map(dir -> s)).getOrElse(Map.empty)
     val nulls = present.flatMap { c =>
-      row.get(s"__nn_$c").map(nn => c -> (rows - nn.asInstanceOf[Long]))
+      observed(s"__nn_$c").map(nn => c -> (rows - nn.asInstanceOf[Long]))
     }.toMap
+    val bloomPresent = physTracked(bloomCols).filter(schema.fieldNames.contains)
     if ((bloomPresent.nonEmpty || (fileStats && present.nonEmpty)) && rows > 0) {
-      val written = spark.read.schema(df.schema)
+      val written = spark.read.schema(schema)
         .parquet(new Path(rootPath, dir).toString)
       if (bloomPresent.nonEmpty) writeBlooms(written, dir, bloomPresent, rows)
       if (fileStats && present.nonEmpty) writeFileStats(written, dir, present)
@@ -1348,19 +1344,10 @@ final class VersionedTable(spark: SparkSession, val root: String,
     * commit — a crash in between is covered by the manifest entry until
     * a vacuum, the sidecar thereafter). Atomic overwrite via temp+rename.
     */
-  private[sources] def streamLedgerPut(queryId: String, batchId: Long): Unit = {
-    val dir = new Path(logPath, "_stream")
-    fs.mkdirs(dir)
-    val tmp = new Path(dir, s".tmp-$queryId-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(batchId.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      rootPath.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, streamLedgerPath(queryId),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  private[sources] def streamLedgerPut(queryId: String, batchId: Long): Unit =
+    LogStore.replace(fs, spark.sparkContext.hadoopConfiguration,
+      streamLedgerPath(queryId),
+      batchId.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   private def streamLedgerPath(queryId: String): Path =
     new Path(logPath, s"_stream/$queryId")
@@ -1556,7 +1543,6 @@ final class VersionedTable(spark: SparkSession, val root: String,
         // probes take the raw projection and skip that exchange
         val keysRaw = updatesP.select(keyColsP.map(col): _*)
         lazy val keys = keysRaw.distinct()
-        val dirPattern = s"(data/c[0-9]{10}-[0-9a-f]{8}(?:/$chunkCol=[0-9]+)?)"
         // NOTE (r16): a "skip discovery when ONE candidate dir" short-
         // circuit was tried and REVERTED — it breaks the no-match append
         // contract (an insert-only merge must never rewrite untouched
@@ -1567,12 +1553,9 @@ final class VersionedTable(spark: SparkSession, val root: String,
         // distinct + collect round-trip.
         val matchedDirs =
           if (scanDirs.isEmpty) Set.empty[String]
-          else readDirsWithPos(m, scanDirs)
+          else hitDirTokens(readDirsWithPos(m, scanDirs)
             .select(col(dvFileCol) +: keyColsP.map(col): _*)
-            .join(keysRaw, keyColsP, "left_semi")
-            .agg(collect_set(
-              regexp_extract(col(dvFileCol), dirPattern, 1)).as("d"))
-            .head().getSeq[String](0).toSet // bounded: dir names
+            .join(keysRaw, keyColsP, "left_semi"))
         // the sync arm's extra discovery: dirs holding rows where the cond
         // is TRUE and the key has no updates row — stats-pruned by the
         // cond first (skipDirsFor), then exact, anti-joined on the keys
@@ -1586,11 +1569,8 @@ final class VersionedTable(spark: SparkSession, val root: String,
             // the ORIGINAL (logical-name) cond; it owns the translation.
             val scope = skipDirsFor(cur, deleteNotMatchedBySource.get)
             if (scope.isEmpty) Set.empty
-            else readDirsWithPos(m, scope).filter(p)
-              .join(keysRaw, keyColsP, "left_anti")
-              .agg(collect_set(
-                regexp_extract(col(dvFileCol), dirPattern, 1)).as("d"))
-              .head().getSeq[String](0).toSet // bounded
+            else hitDirTokens(readDirsWithPos(m, scope).filter(p)
+              .join(keysRaw, keyColsP, "left_anti"))
         }
         val hitDirs = matchedDirs ++ nmbsDirs
         val keep = m.dataDirs.filterNot(d => matchesToken(d, hitDirs))
@@ -1657,11 +1637,9 @@ final class VersionedTable(spark: SparkSession, val root: String,
     *    rows.
     */
   def delete(predicate: Column, useDeletionVectors: Boolean = false): Long = {
-    val cur = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val v = cur + 1
-    val m = manifest(cur)
-    val pred = coalesce(toPhysicalCol(m, predicate), lit(false))
+    val m = latestManifest
+    val v = m.version + 1
+    val pred = physicalPredicate(m, predicate)
     if (useDeletionVectors) {
       val dvDir = f"dv/v$v%010d-${java.util.UUID.randomUUID().toString.take(8)}"
       val obs = new org.apache.spark.sql.Observation(
@@ -1673,8 +1651,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
       val matched = obs.get("__rows").asInstanceOf[Long]
       if (matched == 0L) {
         fs.delete(new Path(rootPath, dvDir), true)
-        return commit(m.copy(version = v, operation = "delete",
-          timestampMs = System.currentTimeMillis()))
+        return commitNoop(m, "delete")
       }
       return commit(Manifest(v, "delete_dv", System.currentTimeMillis(),
         m.dataDirs, m.stats, m.schemaJson, m.dvs :+ dvDir, m.dirRows,
@@ -1686,37 +1663,85 @@ final class VersionedTable(spark: SparkSession, val root: String,
     // ledger (rows written == rows before). The no-match case still
     // commits METADATA-ONLY (the staged dir is discarded), identical to
     // the two-pass path's semantics; multi-dir tables keep full discovery.
-    if (m.dataDirs.size == 1 && m.dvs.isEmpty &&
-        m.dataDirs.forall(m.dirRows.contains)) {
-      val total = m.dataDirs.flatMap(m.dirRows.get).sum
-      val w = writeData(readDirsOf(m, m.dataDirs).filter(!pred), v)
-      if (w.rows == total) {
-        fs.delete(new Path(rootPath, w.dir), true)
-        return commit(m.copy(version = v, operation = "delete",
-          timestampMs = System.currentTimeMillis()))
-      }
-      return commit(Manifest(v, "delete", System.currentTimeMillis(),
-        Seq(w.dir), w.stats, m.schemaJson, m.dvs, dirRows = w.rowsEntry,
-        dirNulls = w.nullsEntry, colMap = m.colMap))
+    fusedDeleteRows(m) match {
+      case Some(total) =>
+        val w = writeData(readDirsOf(m, m.dataDirs).filter(!pred), v)
+        if (w.rows == total) {
+          fs.delete(new Path(rootPath, w.dir), true)
+          commitNoop(m, "delete")
+        } else commit(rewriteManifest(m, "delete", Nil, w))
+      case None =>
+        val hitDirs = hitDirTokens(readDirsWithPos(m, m.dataDirs).filter(pred))
+        if (hitDirs.isEmpty) commitNoop(m, "delete")
+        else {
+          val (hit, keep) = m.dataDirs.partition(d => matchesToken(d, hitDirs))
+          commitRewrite(m, "delete", keep, readDirsOf(m, hit).filter(!pred))
+        }
     }
-    // a clustered commit's data dirs are chunk SUBdirs — the extractor must
-    // keep the =N suffix or hit dirs would never match the manifest entries
-    val hitDirs = readDirsWithPos(m, m.dataDirs).filter(pred)
-      .select(regexp_extract(col(dvFileCol),
-        s"(data/c[0-9]{10}-[0-9a-f]{8}(?:/$chunkCol=[0-9]+)?)", 1).as("d"))
-      .distinct().collect().map(_.getString(0)).toSet // bounded: dir names
-    if (hitDirs.isEmpty)
-      return commit(m.copy(version = v, operation = "delete",
-        timestampMs = System.currentTimeMillis()))
-    val keep = m.dataDirs.filterNot(d => matchesToken(d, hitDirs))
-    val hit = m.dataDirs.filter(d => matchesToken(d, hitDirs))
-    val survivors = readDirsOf(m, hit).filter(!pred)
-    val w = writeData(survivors, v)
-    commit(Manifest(v, "delete", System.currentTimeMillis(), keep :+ w.dir,
+  }
+
+  /** The row count of a DELETE's fused single-dir rewrite target — Some
+    * when `m` is ONE data dir with a known row ledger and no live DVs.
+    * Discovery cannot prune below dir grain there, so the rewrite writes
+    * the survivors straight away and reads "nothing matched" off the
+    * ledger (rows written == this count).
+    */
+  private[sources] def fusedDeleteRows(m: Manifest): Option[Long] =
+    if (m.dataDirs.size == 1 && m.dvs.isEmpty) m.dirRows.get(m.dataDirs.head)
+    else None
+
+  /** The manifest of a dir-grained copy-on-write commit on top of `m`:
+    * the `keep` dirs carry with their stats, row and null ledgers, and
+    * the freshly-written `w` joins them.
+    */
+  private def rewriteManifest(m: Manifest, operation: String,
+                              keep: Seq[String], w: DirWrite): Manifest =
+    Manifest(m.version + 1, operation, System.currentTimeMillis(),
+      keep :+ w.dir,
       m.stats.view.filterKeys(keep.contains).toMap ++ w.stats, m.schemaJson,
       m.dvs, m.dirRows.view.filterKeys(keep.contains).toMap + (w.dir -> w.rows),
       m.dirNulls.view.filterKeys(keep.contains).toMap ++ w.nullsEntry,
-      colMap = m.colMap))
+      colMap = m.colMap)
+
+  /** Commit `m`'s state again as the next version — the metadata-only
+    * commit of a DML that matched nothing.
+    */
+  private[sources] def commitNoop(m: Manifest, operation: String): Long =
+    commit(m.copy(version = m.version + 1, operation = operation,
+      timestampMs = System.currentTimeMillis()))
+
+  /** Write `df` (physical columns) as one new dir and commit it beside
+    * the carried `keep` dirs of `m`.
+    */
+  private[sources] def commitRewrite(m: Manifest, operation: String,
+                                     keep: Seq[String], df: DataFrame): Long =
+    commit(rewriteManifest(m, operation, keep, writeData(df, m.version + 1)))
+
+  /** [[commitRewrite]] for a dir another job already wrote — the hook the
+    * one-pass partitioned DML commits each member through (its single
+    * write stages every member's post-image at once, observing each one's
+    * ledger under [[memberLedgerAggs]] names; `observed` resolves the
+    * unprefixed [[ledgerAggs]] names). The staged dir MOVES into this
+    * table's data, then the manifest commits as version `m.version + 1`:
+    * a concurrent commit since `m` raises [[ConcurrentWriteException]]
+    * and removes the moved dir again. Sibling of [[adoptFiles]], minus
+    * its readback and its retry.
+    */
+  private[sources] def commitStagedDir(m: Manifest, operation: String,
+                                       keep: Seq[String], staged: Path,
+                                       schema: StructType,
+                                       observed: String => Option[Any]): Long = {
+    val dir = newDataDir(m.version + 1)
+    val dst = new Path(rootPath, dir)
+    fs.mkdirs(dst.getParent)
+    if (!fs.rename(staged, dst))
+      throw new java.io.IOException(s"failed to move staged dir $staged to $dst")
+    val w = writtenDir(dir, schema, trackedStatsIn(schema.fieldNames.toSeq),
+      observed)
+    try commit(rewriteManifest(m, operation, keep, w))
+    catch {
+      case e: ConcurrentWriteException => fs.delete(dst, true); throw e
+    }
   }
 
   /** Row-level UPDATE (UPDATE … SET … WHERE predicate): matched rows get
@@ -1732,11 +1757,8 @@ final class VersionedTable(spark: SparkSession, val root: String,
     */
   def update(predicate: Column, assignments: Map[String, Column]): Long = {
     require(assignments.nonEmpty, "update requires at least one assignment")
-    val cur = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val v = cur + 1
-    val m = manifest(cur)
-    val snap = readVersion(cur)
+    val m = latestManifest
+    val snap = readVersion(m.version)
     val missing = assignments.keySet.filterNot(snap.columns.contains)
     require(missing.isEmpty,
       s"update assigns unknown columns: ${missing.mkString(", ")}")
@@ -1745,16 +1767,10 @@ final class VersionedTable(spark: SparkSession, val root: String,
     val assignP = assignments.map { case (k, e) =>
       physName(m, k) -> toPhysicalCol(m, e)
     }
-    val pred = coalesce(toPhysicalCol(m, predicate), lit(false))
-    val hitDirs = readDirsWithPos(m, m.dataDirs).filter(pred)
-      .select(regexp_extract(col(dvFileCol),
-        s"(data/c[0-9]{10}-[0-9a-f]{8}(?:/$chunkCol=[0-9]+)?)", 1).as("d"))
-      .distinct().collect().map(_.getString(0)).toSet // bounded: dir names
-    if (hitDirs.isEmpty)
-      return commit(m.copy(version = v, operation = "update",
-        timestampMs = System.currentTimeMillis()))
-    val keep = m.dataDirs.filterNot(d => matchesToken(d, hitDirs))
-    val hit = m.dataDirs.filter(d => matchesToken(d, hitDirs))
+    val pred = physicalPredicate(m, predicate)
+    val hitDirs = hitDirTokens(readDirsWithPos(m, m.dataDirs).filter(pred))
+    if (hitDirs.isEmpty) return commitNoop(m, "update")
+    val (hit, keep) = m.dataDirs.partition(d => matchesToken(d, hitDirs))
     val src = readDirsOf(m, hit)
     val rewritten = src.select(src.schema.fields.map { f =>
       assignP.get(f.name) match {
@@ -1764,12 +1780,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
       }
     }.toSeq: _*)
     validateConstraints(rewritten, "update")
-    val w = writeData(rewritten, v)
-    commit(Manifest(v, "update", System.currentTimeMillis(), keep :+ w.dir,
-      m.stats.view.filterKeys(keep.contains).toMap ++ w.stats, m.schemaJson,
-      m.dvs, m.dirRows.view.filterKeys(keep.contains).toMap + (w.dir -> w.rows),
-      m.dirNulls.view.filterKeys(keep.contains).toMap ++ w.nullsEntry,
-      colMap = m.colMap))
+    commitRewrite(m, "update", keep, rewritten)
   }
 
   /** Full SQL MERGE INTO (the three-arm statement: WHEN MATCHED [AND c]
@@ -1795,9 +1806,11 @@ final class VersionedTable(spark: SparkSession, val root: String,
     *
     * Dir-grained copy-on-write, same discipline as [[update]]/[[delete]]:
     * one discovery join finds the data dirs holding matched rows; only
-    * those rewrite (post-image of every row in the dir), not-matched
-    * inserts land in the same new dir, untouched dirs carry their
-    * skipping stats forward. With a `notMatchedBySource` arm every dir
+    * those rewrite (post-image of every row in the dir) through ONE
+    * outer join with the source — full outer when INSERT arms exist, so
+    * the not-matched inserts come out of the same join and land in the
+    * same new dir — and untouched dirs carry their skipping stats
+    * forward. With a `notMatchedBySource` arm every dir
     * is a rewrite candidate (any row might be unmatched) — the
     * stats-scoped narrowing [[merge]] applies to its sync arm is the
     * documented optimization lever. At 100 TB the discovery and rewrite
@@ -1807,43 +1820,11 @@ final class VersionedTable(spark: SparkSession, val root: String,
   def mergeInto(source: DataFrame, condition: Column,
                 matched: Seq[VersionedTable.MergeIntoAction] = Nil,
                 notMatched: Seq[VersionedTable.MergeIntoAction] = Nil,
-                notMatchedBySource: Seq[VersionedTable.MergeIntoAction] = Nil): Long =
-    mergeIntoImpl(source, condition, matched, notMatched, notMatchedBySource,
-      stableSource = false)
-
-  /** [[mergeInto]] with the source-stabilizing checkpoint OPTIONALLY
-    * skipped: the partitioned layer's member merges each receive a filter
-    * over a frame the coordinator ALREADY materialized — deterministic
-    * and replay-stable by construction — so re-storing every member's
-    * slice would only add one store-job per member per commit.
-    */
-  private[sources] def mergeIntoImpl(source: DataFrame, condition: Column,
-                matched: Seq[VersionedTable.MergeIntoAction],
-                notMatched: Seq[VersionedTable.MergeIntoAction],
-                notMatchedBySource: Seq[VersionedTable.MergeIntoAction],
-                stableSource: Boolean): Long = {
-    require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
-      "MERGE INTO requires at least one WHEN clause")
-    require(matched.forall(a => a.isInstanceOf[MergeIntoUpdate] ||
-      a.isInstanceOf[MergeIntoDelete]),
-      "WHEN MATCHED clauses must be UPDATE or DELETE")
-    require(notMatchedBySource.forall(a => a.isInstanceOf[MergeIntoUpdate] ||
-      a.isInstanceOf[MergeIntoDelete]),
-      "WHEN NOT MATCHED BY SOURCE clauses must be UPDATE or DELETE")
-    require(notMatched.forall(_.isInstanceOf[MergeIntoInsert]),
-      "WHEN NOT MATCHED clauses must be INSERT")
-    val cur = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val v = cur + 1
-    val m = manifest(cur)
-    val logicalFields = readVersion(cur).schema.fields.toSeq
-    val clash = source.columns.toSet
-      .intersect(logicalFields.map(_.name).toSet)
-    require(clash.isEmpty,
-      s"source columns must not shadow target columns: ${clash.mkString(", ")}")
-
-    def q(n: String) = col(s"`$n`")
-    val srcFlag = "__vt_mi_src"
+                notMatchedBySource: Seq[VersionedTable.MergeIntoAction] = Nil): Long = {
+    checkMergeClauses(matched, notMatched, notMatchedBySource)
+    val m = latestManifest
+    val logicalFields = readVersion(m.version).schema.fields.toSeq
+    requireNoShadow(source, logicalFields)
     // STABILIZE the source: discovery, rewrite, and insert anti-join are
     // three independent jobs — a non-deterministic or concurrently-read
     // source would otherwise apply clauses inconsistently across them
@@ -1852,138 +1833,80 @@ final class VersionedTable(spark: SparkSession, val root: String,
     // RELEASABLE form, unpersisted in the finally below — plain
     // localCheckpoint pins its blocks for the session, and
     // mergeIntoRetrying re-checkpoints per conflict attempt.
-    val (srcMarked, releaseSrc) =
-      if (stableSource) (source.withColumn(srcFlag, lit(true)), () => ())
-      else org.apache.spark.sql.GraftColumnBridge
-        .localCheckpointReleasable(source.withColumn(srcFlag, lit(true)))
+    val (srcMarked, releaseSrc) = org.apache.spark.sql.GraftColumnBridge
+      .localCheckpointReleasable(source.withColumn(mergeSrcFlag, lit(true)))
     try {
-    // logical-name view of `dirs` keeping the row-position columns
-    // (discovery extracts the owning dir; the cardinality check needs a
-    // per-physical-row identity)
-    def logicalWithPos(dirs: Seq[String]): DataFrame = {
-      val raw = readDirsWithPos(m, dirs)
-      if (m.colMap.isEmpty) raw
-      else raw.select(m.colMap.map { case (p, l) => col(p).as(l) } ++
-        Seq(col(dvFileCol), col(dvRowCol)): _*)
-    }
-    val dirRe = s"(data/c[0-9]{10}-[0-9a-f]{8}(?:/$chunkCol=[0-9]+)?)"
-
-    val hit: Seq[String] =
-      if (notMatchedBySource.nonEmpty) m.dataDirs
-      else if (matched.nonEmpty) {
-        // one collect_set aggregate instead of distinct + collect (same
-        // bounded dir-name result, one less exchange round-trip)
-        val tokens = logicalWithPos(m.dataDirs)
-          .join(srcMarked, condition, "inner")
-          .agg(collect_set(
-            regexp_extract(col(dvFileCol), dirRe, 1)).as("d"))
-          .head().getSeq[String](0).toSet // bounded: dir names
-        m.dataDirs.filter(d => matchesToken(d, tokens))
-      } else Nil
-    val keep = m.dataDirs.filterNot(hit.contains)
-
-    // first applicable clause of an arm as an index column (-1 = none)
-    def firstIdx(actions: Seq[VersionedTable.MergeIntoAction], base: Column): Column =
-      actions.zipWithIndex.foldRight(lit(-1): Column) { case ((a, i), els) =>
-        when(base && a.cond.map(c => coalesce(c, lit(false)))
-          .getOrElse(lit(true)), lit(i)).otherwise(els)
-      }
-
-    val rewritten: DataFrame =
-      if (hit.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(logicalFields))
+      val hit: Seq[String] =
+        if (notMatchedBySource.nonEmpty) m.dataDirs
+        else if (matched.nonEmpty) {
+          val tokens = hitDirTokens(logicalWithPos(m, m.dataDirs)
+            .join(srcMarked, condition, "inner"))
+          m.dataDirs.filter(d => matchesToken(d, tokens))
+        } else Nil
+      if (hit.isEmpty && notMatched.isEmpty) commitNoop(m, "merge_into")
       else {
-        val joined0 = logicalWithPos(hit).join(srcMarked, condition, "left_outer")
-        val matchedFlag = col(srcFlag).isNotNull
-        val joined =
-          if (matched.isEmpty) {
-            // no matched clause reads source columns, but the left join
-            // still FANS OUT a target row matched by several source rows
-            // — keep exactly one copy per physical row (any copy: the
-            // clauses below use only target columns + the match flag)
-            val w = Window.partitionBy(col(dvFileCol), col(dvRowCol))
-              .orderBy(lit(1))
-            joined0.withColumn("__vt_mi_rn", row_number().over(w))
-              .filter(col("__vt_mi_rn") === 1).drop("__vt_mi_rn")
-          } else {
-            val w = Window.partitionBy(col(dvFileCol), col(dvRowCol))
-            joined0
-              .withColumn("__vt_mi_cnt",
-                count(when(matchedFlag, lit(1))).over(w))
-              .filter(assert_true(col("__vt_mi_cnt") <= 1, lit(
-                "MERGE INTO: a target row matched multiple source rows " +
-                  "(cardinality violation)")).isNull)
-          }
-        val mIdx = firstIdx(matched, matchedFlag)
-        val nIdx = firstIdx(notMatchedBySource, !matchedFlag)
-        val deleteFired = (matched.zipWithIndex.collect {
-          case (_: MergeIntoDelete, i) => mIdx === i
-        } ++ notMatchedBySource.zipWithIndex.collect {
-          case (_: MergeIntoDelete, i) => nIdx === i
-        }).reduceOption(_ || _).getOrElse(lit(false))
-        def newVal(f: org.apache.spark.sql.types.StructField): Column = {
-          val arms: Seq[(Column, Column)] =
-            matched.zipWithIndex.collect {
-              case (u: MergeIntoUpdate, i) if u.set.contains(f.name) =>
-                (mIdx === i, u.set(f.name).cast(f.dataType))
-            } ++ notMatchedBySource.zipWithIndex.collect {
-              case (u: MergeIntoUpdate, i) if u.set.contains(f.name) =>
-                (nIdx === i, u.set(f.name).cast(f.dataType))
-            }
-          arms.foldRight(q(f.name)) { case ((p, nv), els) =>
-            when(p, nv).otherwise(els)
-          }
-        }
-        joined.filter(!deleteFired)
-          .select(logicalFields.map(f => newVal(f).as(f.name)): _*)
+        val postLogical =
+          if (hit.nonEmpty)
+            mergeJoined(logicalWithPos(m, hit).join(srcMarked, condition,
+              if (notMatched.isEmpty) "left_outer" else "full_outer"),
+              source.columns.toSeq, logicalFields, matched, notMatched,
+              notMatchedBySource)
+          // discovery ran and found no match: every source row inserts
+          else if (matched.nonEmpty || notMatchedBySource.nonEmpty)
+            mergeInserts(srcMarked, logicalFields, notMatched)
+          else mergeInserts(srcMarked
+            .join(readVersion(m.version), condition, "left_anti"),
+            logicalFields, notMatched)
+        validateConstraints(postLogical, "merge_into")
+        commitRewrite(m, "merge_into", m.dataDirs.filterNot(hit.contains),
+          physicalPostImage(m, postLogical))
       }
-
-    val inserts: DataFrame =
-      if (notMatched.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(logicalFields))
-      else {
-        val unmatchedSrc = srcMarked.drop(srcFlag)
-          .join(readVersion(cur), condition, "left_anti")
-        val iIdx = firstIdx(notMatched, lit(true))
-        unmatchedSrc.withColumn("__vt_mi_idx", iIdx)
-          .filter(col("__vt_mi_idx") >= 0)
-          .select(logicalFields.map { f =>
-            notMatched.zipWithIndex.collect {
-              case (ins: MergeIntoInsert, i) =>
-                (col("__vt_mi_idx") === i,
-                  ins.values.get(f.name).map(_.cast(f.dataType))
-                    .getOrElse(lit(null).cast(f.dataType)))
-            }.foldRight(lit(null).cast(f.dataType): Column) {
-              case ((p, nv), els) => when(p, nv).otherwise(els)
-            }.as(f.name)
-          }: _*)
-      }
-
-    if (hit.isEmpty && notMatched.isEmpty)
-      return commit(m.copy(version = v, operation = "merge_into",
-        timestampMs = System.currentTimeMillis()))
-
-    val postLogical = rewritten.unionByName(inserts)
-    validateConstraints(postLogical, "merge_into")
-    val postPhys =
-      if (m.colMap.isEmpty) postLogical
-      else withDroppedNulls(m,
-        postLogical.select(m.colMap.map { case (p, l) => q(l).as(p) }: _*))
-    val aligned = m.schemaJson.map(parseSchema) match {
-      case Some(ps) => postPhys.select(ps.fieldNames.map(q).toSeq: _*)
-      case None => postPhys
-    }
-    val w = writeData(aligned, v)
-    commit(Manifest(v, "merge_into", System.currentTimeMillis(),
-      keep :+ w.dir,
-      m.stats.view.filterKeys(keep.contains).toMap ++ w.stats, m.schemaJson,
-      m.dvs, m.dirRows.view.filterKeys(keep.contains).toMap + (w.dir -> w.rows),
-      m.dirNulls.view.filterKeys(keep.contains).toMap ++ w.nullsEntry,
-      colMap = m.colMap))
     } finally releaseSrc()
   }
+
+  /** The latest committed manifest — the base a copy-on-write verb reads
+    * and then commits `version + 1` on top of.
+    */
+  private[sources] def latestManifest: Manifest =
+    manifest(latestVersion.getOrElse(
+      throw new IllegalStateException(s"no committed version at $root")))
+
+  /** Logical-name view of `dirs` keeping the row-position columns
+    * ([[dvFileCol]], [[dvRowCol]]): discovery extracts the owning dir,
+    * and MERGE's cardinality check needs a per-physical-row identity.
+    */
+  private[sources] def logicalWithPos(m: Manifest, dirs: Seq[String]): DataFrame =
+    toLogicalWithPos(m, readDirsWithPos(m, dirs))
+
+  /** A [[readPathsWithPos]] frame in `m`'s logical names, plus any
+    * `carry` columns.
+    */
+  private[sources] def toLogicalWithPos(m: Manifest, raw: DataFrame,
+                                        carry: Seq[String] = Nil): DataFrame =
+    if (m.colMap.isEmpty) raw
+    else raw.select(m.colMap.map { case (p, l) => col(p).as(l) } ++
+      (Seq(dvFileCol, dvRowCol) ++ carry).map(col): _*)
+
+  /** A logical post-image in `m`'s physical file layout: mapped columns
+    * back to their physical slots, dropped ones as typed nulls, in the
+    * committed column order; the `carry` columns ride along last.
+    */
+  private[sources] def physicalPostImage(m: Manifest, logical: DataFrame,
+                                         carry: Seq[String] = Nil): DataFrame = {
+    def q(n: String) = col(s"`$n`")
+    val phys =
+      if (m.colMap.isEmpty) logical
+      else withDroppedNulls(m, logical.select(
+        m.colMap.map { case (p, l) => q(l).as(p) } ++ carry.map(q): _*))
+    m.schemaJson.map(parseSchema) match {
+      case Some(ps) => phys.select(ps.fieldNames.toSeq.map(q) ++ carry.map(q): _*)
+      case None => phys
+    }
+  }
+
+  /** A DELETE predicate in `m`'s physical names, NULL read as FALSE. */
+  private[sources] def physicalPredicate(m: Manifest, predicate: Column): Column =
+    coalesce(toPhysicalCol(m, predicate), lit(false))
 
   /** [[mergeInto]] under [[withConflictRetry]] — recompute semantics as in
     * [[mergeRetrying]].
@@ -1995,18 +1918,6 @@ final class VersionedTable(spark: SparkSession, val root: String,
                         maxAttempts: Int = 5): Long =
     withConflictRetry(maxAttempts)(
       mergeInto(source, condition, matched, notMatched, notMatchedBySource))
-
-  /** [[mergeIntoRetrying]] over an already-materialized source
-    * ([[mergeIntoImpl]]'s `stableSource` contract).
-    */
-  private[sources] def mergeIntoStableRetrying(source: DataFrame, condition: Column,
-                        matched: Seq[VersionedTable.MergeIntoAction] = Nil,
-                        notMatched: Seq[VersionedTable.MergeIntoAction] = Nil,
-                        notMatchedBySource: Seq[VersionedTable.MergeIntoAction] = Nil,
-                        maxAttempts: Int = 5): Long =
-    withConflictRetry(maxAttempts)(
-      mergeIntoImpl(source, condition, matched, notMatched, notMatchedBySource,
-        stableSource = true))
 
   // ---------------------------------------------------------------- read
 
@@ -2183,9 +2094,10 @@ final class VersionedTable(spark: SparkSession, val root: String,
     }
 
   private def dvFrame(m: Manifest): Option[DataFrame] =
-    if (m.dvs.isEmpty) None
-    else Some(spark.read.parquet(
-      m.dvs.map(d => new Path(rootPath, d).toString): _*))
+    if (m.dvs.isEmpty) None else Some(spark.read.parquet(dvPathsOf(m): _*))
+
+  private[sources] def dvPathsOf(m: Manifest): Seq[String] =
+    m.dvs.map(d => new Path(rootPath, d).toString)
 
   /** DV-aware read of a dir subset, keeping the row-position columns
     * ([[dvFileCol]], [[dvRowCol]]) — discovery jobs extract the owning dir
@@ -2196,18 +2108,25 @@ final class VersionedTable(spark: SparkSession, val root: String,
     * dropped simply match nothing. DVs are tiny relative to the table
     * (they hold only deleted positions), so AQE broadcasts the anti-join.
     */
-  private def readDirsWithPos(m: Manifest, dirs: Seq[String]): DataFrame = {
-    val base = rawDirs(m, dirs).select(col("*"),
+  private[sources] def readDirsWithPos(m: Manifest, dirs: Seq[String]): DataFrame =
+    readPathsWithPos(m, dirPathsOf(dirs), dvPathsOf(m))
+
+  /** [[readDirsWithPos]] over resolved data paths and deletion-vector
+    * files, which may span several tables sharing `m`'s physical schema
+    * (the one-pass partitioned DML reads all its members as one relation).
+    */
+  private[sources] def readPathsWithPos(m: Manifest, paths: Seq[String],
+                                        dvPaths: Seq[String]): DataFrame = {
+    val base = rawPaths(m, paths).select(col("*"),
       col("_metadata.file_path").as(dvFileCol),
       col("_metadata.row_index").as(dvRowCol))
-    dvFrame(m) match {
-      case None     => base
-      case Some(dv) => base.join(dv, Seq(dvFileCol, dvRowCol), "left_anti")
-    }
+    if (dvPaths.isEmpty) base
+    else base.join(spark.read.parquet(dvPaths: _*), Seq(dvFileCol, dvRowCol),
+      "left_anti")
   }
 
   /** DV-aware read of a dir subset (the user-facing column set). */
-  private def readDirsOf(m: Manifest, dirs: Seq[String]): DataFrame =
+  private[sources] def readDirsOf(m: Manifest, dirs: Seq[String]): DataFrame =
     if (m.dvs.isEmpty) rawDirs(m, dirs)
     else readDirsWithPos(m, dirs).drop(dvFileCol, dvRowCol)
 
@@ -3626,8 +3545,32 @@ object VersionedTable {
   /** Pseudo-column marking a data dir with zero rows (always skippable). */
   val rowsMarker = "__vt_rows"
 
+  /** Discovery: the tokens of the data dirs the rows of `rows` (a frame
+    * carrying [[dvFileCol]]) come from, in one collect_set aggregate —
+    * one exchange, and a result bounded by the dirs read.
+    */
+  private[sources] def hitDirTokens(rows: DataFrame): Set[String] =
+    rows.agg(collect_set(regexp_extract(col(dvFileCol), dirTokenRe, 1)))
+      .head().getSeq[String](0).toSet
+
+  /** Discovery tokens are the RELATIVE "data/c…[/chunk=N]" form; manifest
+    * entries are usually the same, but a shallow clone's entries are
+    * absolute paths into the source table — suffix-match so both resolve
+    * (the uuid in the dir name makes suffix collisions negligible).
+    */
+  private[sources] def matchesToken(entry: String, tokens: Set[String]): Boolean =
+    tokens.exists(t => entry == t || entry.endsWith("/" + t))
+
   /** Partition column name for clustered-compaction chunk subdirs. */
   val chunkCol = "_vt_chunk"
+
+  /** Extracts the owning data dir's discovery token from a part file's
+    * path. A clustered commit's data dirs are chunk SUBdirs, so the token
+    * keeps the `=N` suffix or hit dirs would never match their manifest
+    * entries.
+    */
+  private[sources] val dirTokenRe =
+    s"(data/c[0-9]{10}-[0-9a-f]{8}(?:/$chunkCol=[0-9]+)?)"
 
   /** Bloom sidecar filename prefix inside a data dir. The leading `_`
     * keeps Hadoop's default PathFilter (and so every parquet scan of the
@@ -3685,6 +3628,137 @@ object VersionedTable {
   final case class MergeIntoInsert(cond: Option[Column],
                                    values: Map[String, Column])
     extends MergeIntoAction
+
+  /** Marks the source side of a MERGE join: non-null exactly on target
+    * rows some source row matched.
+    */
+  private[sources] val mergeSrcFlag = "__vt_mi_src"
+
+  private[sources] def checkMergeClauses(matched: Seq[MergeIntoAction],
+                                         notMatched: Seq[MergeIntoAction],
+                                         notMatchedBySource: Seq[MergeIntoAction]): Unit = {
+    require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
+      "MERGE INTO requires at least one WHEN clause")
+    require(matched.forall(a => a.isInstanceOf[MergeIntoUpdate] ||
+      a.isInstanceOf[MergeIntoDelete]),
+      "WHEN MATCHED clauses must be UPDATE or DELETE")
+    require(notMatchedBySource.forall(a => a.isInstanceOf[MergeIntoUpdate] ||
+      a.isInstanceOf[MergeIntoDelete]),
+      "WHEN NOT MATCHED BY SOURCE clauses must be UPDATE or DELETE")
+    require(notMatched.forall(_.isInstanceOf[MergeIntoInsert]),
+      "WHEN NOT MATCHED clauses must be INSERT")
+  }
+
+  private[sources] def requireNoShadow(source: DataFrame,
+                                       fields: Seq[StructField]): Unit = {
+    val clash = source.columns.toSet.intersect(fields.map(_.name).toSet)
+    require(clash.isEmpty,
+      s"source columns must not shadow target columns: ${clash.mkString(", ")}")
+  }
+
+  /** First applicable clause of an arm as an index column (-1 = none). */
+  private def firstIdx(actions: Seq[MergeIntoAction], base: Column): Column =
+    actions.zipWithIndex.foldRight(lit(-1): Column) { case ((a, i), els) =>
+      when(base && a.cond.map(c => coalesce(c, lit(false)))
+        .getOrElse(lit(true)), lit(i)).otherwise(els)
+    }
+
+  /** MERGE INTO's clause logic over ONE join: `joined0` is target rows
+    * (logical columns plus [[dvFileCol]]/[[dvRowCol]]) outer-joined to the
+    * source (columns `srcCols`, marked with [[mergeSrcFlag]]) — left outer
+    * when there are no INSERT arms, else full outer, whose source-only
+    * rows are the unmatched source rows. That holds whenever the target
+    * side covers every row any source row matches (all dirs, or the dirs
+    * discovery found): the Delta shape of one touched-file join plus one
+    * rewrite join. Returns, in `fields` (plus the `carry` columns), the
+    * post-image of every target row and the inserted rows: the first TRUE
+    * clause of a row's arm fires, DELETE drops the row, an unmatched
+    * source row no INSERT clause takes is dropped, and a target row
+    * matched by several source rows fails the job when matched clauses
+    * exist. Shared by the flat [[VersionedTable.mergeInto]] and the
+    * one-pass partitioned MERGE.
+    */
+  private[sources] def mergeJoined(joined0: DataFrame, srcCols: Seq[String],
+                                   fields: Seq[StructField],
+                                   matched: Seq[MergeIntoAction],
+                                   notMatched: Seq[MergeIntoAction],
+                                   notMatchedBySource: Seq[MergeIntoAction],
+                                   carry: Seq[Column] = Nil): DataFrame = {
+    def q(n: String) = col(s"`$n`")
+    val isTarget = col(dvFileCol).isNotNull
+    val matchedRow = isTarget && col(mergeSrcFlag).isNotNull
+    // a target row's matches meet in its (file, row) window; unmatched
+    // source rows (null position) spread by their content instead
+    val rowId = Window.partitionBy(col(dvFileCol), col(dvRowCol),
+      when(!isTarget, xxhash64(srcCols.map(q): _*)))
+    val joined =
+      if (matched.isEmpty) {
+        // no matched clause reads source columns, but the join still FANS
+        // OUT a target row matched by several source rows — keep exactly
+        // one copy per physical row (any copy: the clauses below use only
+        // target columns + the match flag)
+        joined0.withColumn("__vt_mi_rn", row_number().over(rowId.orderBy(lit(1))))
+          .filter(!isTarget || col("__vt_mi_rn") === 1).drop("__vt_mi_rn")
+      } else
+        joined0
+          .withColumn("__vt_mi_cnt", count(when(matchedRow, lit(1))).over(rowId))
+          .filter(assert_true(col("__vt_mi_cnt") <= 1, lit(
+            "MERGE INTO: a target row matched multiple source rows " +
+              "(cardinality violation)")).isNull)
+    val mIdx = firstIdx(matched, matchedRow)
+    val nIdx = firstIdx(notMatchedBySource, isTarget && !matchedRow)
+    val iIdx = firstIdx(notMatched, !isTarget)
+    val deleteFired = (matched.zipWithIndex.collect {
+      case (_: MergeIntoDelete, i) => mIdx === i
+    } ++ notMatchedBySource.zipWithIndex.collect {
+      case (_: MergeIntoDelete, i) => nIdx === i
+    }).reduceOption(_ || _).getOrElse(lit(false))
+    def newVal(f: StructField): Column = {
+      val arms: Seq[(Column, Column)] =
+        matched.zipWithIndex.collect {
+          case (u: MergeIntoUpdate, i) if u.set.contains(f.name) =>
+            (mIdx === i, u.set(f.name).cast(f.dataType))
+        } ++ notMatchedBySource.zipWithIndex.collect {
+          case (u: MergeIntoUpdate, i) if u.set.contains(f.name) =>
+            (nIdx === i, u.set(f.name).cast(f.dataType))
+        }
+      arms.foldRight(q(f.name)) { case ((p, nv), els) =>
+        when(p, nv).otherwise(els)
+      }
+    }
+    val out = fields.map(f =>
+      if (notMatched.isEmpty) newVal(f).as(f.name)
+      else when(isTarget, newVal(f)).otherwise(insertVal(notMatched, iIdx, f))
+        .as(f.name))
+    joined.filter((isTarget && !deleteFired) || (!isTarget && iIdx >= 0))
+      .select(out ++ carry: _*)
+  }
+
+  /** Column `f` of a row the INSERT clause at `idx` builds (NULL when the
+    * clause leaves it unassigned).
+    */
+  private def insertVal(notMatched: Seq[MergeIntoAction], idx: Column,
+                        f: StructField): Column =
+    notMatched.zipWithIndex.collect {
+      case (ins: MergeIntoInsert, i) =>
+        (idx === i, ins.values.get(f.name).map(_.cast(f.dataType))
+          .getOrElse(lit(null).cast(f.dataType)))
+    }.foldRight(lit(null).cast(f.dataType): Column) {
+      case ((p, nv), els) => when(p, nv).otherwise(els)
+    }
+
+  /** MERGE INTO's NOT MATCHED arms over source rows known to match no
+    * target row: the first TRUE INSERT clause builds the row in `fields`
+    * (plus the `carry` columns); no clause drops it. Shared like
+    * [[mergeJoined]].
+    */
+  private[sources] def mergeInserts(unmatched: DataFrame, fields: Seq[StructField],
+                                    notMatched: Seq[MergeIntoAction],
+                                    carry: Seq[Column] = Nil): DataFrame = {
+    val idx = firstIdx(notMatched, lit(true))
+    unmatched.filter(idx >= 0)
+      .select(fields.map(f => insertVal(notMatched, idx, f).as(f.name)) ++ carry: _*)
+  }
 
   final class ConcurrentWriteException(msg: String, cause: Throwable)
     extends RuntimeException(msg, cause)

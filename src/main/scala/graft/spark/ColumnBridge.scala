@@ -57,13 +57,16 @@ object GraftColumnBridge {
     * session lifetime. Same recipe as `Dataset.checkpoint(eager=false,
     * reliable=false)` — copy the reused UnsafeRow buffers, localCheckpoint
     * the internal RDD — but the RDD reference is kept and handed back as
-    * an unpersist closure for a `finally` block.
+    * an unpersist closure for a `finally` block. Like `checkpoint`, the
+    * frame keeps the source plan's size estimate, so a small checkpointed
+    * MERGE source is still broadcast into its joins.
     */
   def localCheckpointReleasable(df: DataFrame): (DataFrame, () => Unit) = {
-    val classicSpark = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val rdd = df.queryExecution.toRdd.map(_.copy()).localCheckpoint()
-    val out = classicSpark.internalCreateDataFrame(
-      rdd, df.schema, isStreaming = false)
+    val classicDf = df.asInstanceOf[classic.Dataset[Row]]
+    val rdd = classicDf.queryExecution.toRdd.map(_.copy()).localCheckpoint()
+    val out = classic.Dataset.ofRows(classicDf.sparkSession,
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(
+        rdd, classicDf, isStreaming = false))
     (out, () => { rdd.unpersist(blocking = false); () })
   }
 
